@@ -1,5 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Wall-clock bench: one JSON line with the total, per-family and top-10
+  * query seconds plus the one-off build and serving lanes.
+  *
+  * It measures and reports; it does not judge. Per-query regressions are
+  * caught deterministically by the work budget (`docs/WORK_BUDGET.tsv`,
+  * pinned by EntryAnalysisSpec), and wall-clock regressions by the
+  * repository benchmark's matched parent/change A/B (`perfbench/`).
+  */
 object Bench {
   /** Cumulative GC milliseconds across all collectors (for charging GC to
     * the run that incurred it in the stderr diagnostics). */
@@ -9,239 +18,113 @@ object Bench {
       .map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
-  /** Regression-gate selection, factored out so the overflow path is
-    * spec-testable (judge r14: `take(5)` silently dropped the 6th+
-    * gate-exceeding query — mm_video escaped un-adjudicated). EVERY query
-    * past the gate (>+0.30 s AND >1.3× the min-of-window baseline) is
-    * flagged; only the `remeasureCap` worst by absolute delta get the
-    * expensive 3× re-measure, the rest are reported `flagged_unmeasured`
-    * and their PERQ history is left untouched (an un-adjudicated inflated
-    * value must never become a window entry). Returns
-    * (toRemeasure, unmeasuredOverflow) as (name, prevMin, run, delta). */
-  private[graft] def selectRegressions(
-      current: Map[String, Double], hist: Map[String, Seq[Double]],
-      remeasureCap: Int = 5)
-      : (Seq[(String, Double, Double, Double)], Seq[(String, Double, Double, Double)]) = {
-    val regs = current.toSeq
-      .flatMap { case (k, v) => hist.get(k).map(h => (k, h.min, v, v - h.min)) }
-      .filter { case (_, p, v, d) => d > 0.30 && v > p * 1.3 }
-      .sortBy(-_._4)
-    (regs.take(remeasureCap), regs.drop(remeasureCap))
+  private def seconds(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  private def millis(f: () => Unit): Double = {
+    val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e6
   }
 
-  /** Canary-normalized ERA GATE (judge r18 what's-wrong #1): the pure-JVM
-    * PointServe canary (no Spark, no IO, code untouched round over round)
-    * moves only when the BOX moves — r18's 0.184→0.315 ms canary was the
-    * evidence that adjudicated a 0.86 geomean as box drift. ratio = this
-    * run's canary avg over the MIN of the stored window; -1 when either
-    * side is missing. Above [[EraDriftRatio]] with flags present, per-query
-    * in-band numbers cannot separate code from box: every flag is reported
-    * `era_drift` wholesale (the honest verdict — the adjudication is a
-    * worktree differential on a calm box, not more hot-box probes) and the
-    * PERQ history is left untouched so clean-era minima survive. */
-  private[graft] val EraDriftRatio = 1.3
-  private[graft] def eraRatio(canaryAvg: Double, hist: Seq[Double]): Double =
-    if (canaryAvg <= 0 || hist.isEmpty || hist.min <= 0) -1.0
-    else canaryAvg / hist.min
+  /** Run a one-off lane; a throw prints the exception and yields
+    * `fallback` (the lane's -1 sentinels) instead of vanishing. */
+  private def lane[A](name: String, fallback: => A)(body: => A): A =
+    try body
+    catch { case t: Throwable =>
+      System.err.println(s"[bench] $name lane failed: $t")
+      fallback
+    }
 
-  /** Flag adjudication, factored for spec coverage (judge r18 item 1: kill
-    * the `unmeasured_cold_*` verdict class — every gate-exceeding query
-    * ends CLOSED). Under era drift nothing is probed (see [[eraRatio]]).
-    * Otherwise the top-`remeasureCap` flags by delta get the in-band 3×
-    * re-measure and, if still out of band, a SOLO fresh-JVM cold floor;
-    * overflow flags skip the re-measure but get the SAME solo cold floor —
-    * no shared batch JVM (r17 measured batch-probed floors ~1.3× the same
-    * queries' solo floors: GC debt from earlier probes inflates later
-    * ones). Returns (name, prev, run, remeasureMin, coldFloor, verdict);
-    * -1 = lane not run. */
-  private[graft] def adjudicateFlags(
-      regs: Seq[(String, Double, Double, Double)],
-      overflow: Seq[(String, Double, Double, Double)],
-      eraDrifted: Boolean,
-      remeasure: String => Double,
-      coldFloor: String => Double)
-      : Seq[(String, Double, Double, Double, Double, String)] = {
-    def coldVerdict(p: Double, cold: Double): String =
-      if (cold < 0) "cold_failed"
-      else if (cold <= p * 1.3 || cold - p <= 0.30) "cold_noise"
-      else "cold_regressed"
-    if (eraDrifted)
-      (regs ++ overflow).map { case (k, p, v, _) =>
-        (k, p, v, -1.0, -1.0, "era_drift") }
+  /** (avg, p99) of latency samples; (-1, -1) when the lane produced none. */
+  private def avgP99(samples: Seq[Double]): (Double, Double) =
+    if (samples.isEmpty) (-1.0, -1.0)
     else {
-      val rm = regs.map { case (k, p, v, _) =>
-        val re = remeasure(k)
-        val verdict =
-          if (re < 0) "remeasure_failed"
-          else if (re <= p * 1.3 || re - p <= 0.30) "noise"
-          else "regressed"
-        (k, p, v, re, verdict)
-      }
-      rm.map {
-        case (k, p, v, re, "regressed") =>
-          val cold = coldFloor(k)
-          (k, p, v, re, cold, coldVerdict(p, cold))
-        case (k, p, v, re, vd) => (k, p, v, re, -1.0, vd)
-      } ++ overflow.map { case (k, p, v, _) =>
-        val cold = coldFloor(k)
-        (k, p, v, -1.0, cold, coldVerdict(p, cold))
-      }
+      val sorted = samples.sorted
+      (samples.sum / samples.size,
+        sorted(math.min(sorted.size - 1, (sorted.size * 99) / 100)))
     }
-  }
 
-  /** COLD-FLOOR probe mode (judge r16 item 2 — the manual
-    * BENCH_ADJUDICATION procedure, automated): a FRESH JVM measures only
-    * the named queries (warm pass + min of 2 timed runs each) and prints
-    * one `COLDFLOOR {"query":…,"floor":…}` line per query. The parent
-    * bench spawns this for every `regressed`/`flagged_unmeasured` verdict
-    * so the driver artifact ships with its adjudication closed instead of
-    * waiting for a post-hoc side doc. */
-  private def coldProbe(names: Seq[String], sfDir: String, cpus: String): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => () }
-    // a cold floor on a hot box is no floor — give the box up to 30 s
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val threshold = math.max(2.0, cpus.toDouble / 8.0)
-    var waited = 0
-    while (osBean.getSystemLoadAverage > threshold && waited < 30) {
-      Thread.sleep(5000); waited += 5
-    }
-    def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    names.foreach { k =>
-      val floor = SparkEntry.queries.get(k) match {
-        case None => -1.0
-        case Some(fn) =>
-          try {
-            fn(spark, sfDir).count() // warm pass (cached store/index builds land here)
-            (0 until 2).map { _ =>
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              val dt = (System.nanoTime() - t0) / 1e9
-              spark.catalog.clearCache(); System.gc()
-              dt
-            }.min
-          } catch { case _: Throwable => -1.0 }
-      }
-      println(s"""COLDFLOOR {"query":"$k","floor":${f2(floor)}}""")
-    }
-    spark.stop()
-  }
-
-  /** Spawn [[coldProbe]] in a fresh JVM (same flags + classpath — `run`
-    * is forked, so `java.class.path` is real) and parse the floors.
-    * Returns name → floor seconds (-1 = probe failed). Never throws: a
-    * broken probe must not take the headline JSON down with it. */
-  private[graft] def coldFloors(names: Seq[String], sfDir: String,
-                                cpus: String): Map[String, Double] = {
-    if (names.isEmpty) return Map.empty
-    try {
-      import scala.jdk.CollectionConverters._
-      val javaBin = new java.io.File(
-        new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", sys.props("java.class.path"), "graft.Bench")
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.environment().put("SPARK_GRAFT_COLD_QUERY", names.mkString(","))
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      val p = pb.start()
-      // drain stderr concurrently or Spark's logging fills the pipe and
-      // deadlocks the child
-      val errDrain = new Thread(() => {
-        val in = p.getErrorStream
-        val buf = new Array[Byte](8192)
-        try { while (in.read(buf) >= 0) {} } catch { case _: Throwable => () }
-      })
-      errDrain.setDaemon(true); errDrain.start()
-      val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val reader = new Thread(() => {
-        val rd = new java.io.BufferedReader(
-          new java.io.InputStreamReader(p.getInputStream, "UTF-8"))
+  /** Closed-loop throughput: 16 threads issue `call(i)` round-robin for a
+    * 2 s window; completed calls per second. A throw inside a worker kills
+    * only that thread and would silently DEFLATE the figure, so any dead
+    * thread makes the result -1 instead. */
+  private def qps16(lane: String)(call: Int => Unit): Long = {
+    val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val t0 = System.nanoTime()
+    val deadline = t0 + 2000000000L
+    val threads = (0 until 16).map { tid =>
+      new Thread(() => {
         try {
-          var l = rd.readLine()
-          while (l != null) { lines.add(l); l = rd.readLine() }
-        } catch { case _: Throwable => () }
+          var i = tid
+          while (System.nanoTime() < deadline && !failed.get()) {
+            call(i); calls.incrementAndGet(); i += 1
+          }
+        } catch { case t: Throwable =>
+          failed.set(true)
+          System.err.println(s"[bench] $lane qps16 hammer thread died: $t")
+        }
       })
-      reader.setDaemon(true); reader.start()
-      val done = p.waitFor(180L * names.size + 300L,
-        java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) p.destroyForcibly()
-      reader.join(10000)
-      val Floor = """COLDFLOOR \{"query":"([^"]+)","floor":(-?[0-9.]+)\}""".r
-      lines.asScala.collect {
-        case Floor(k, f) => k -> f.toDouble
-      }.toMap
-    } catch {
-      case t: Throwable =>
-        System.err.println(s"[bench] cold-floor probe failed: $t")
-        Map.empty
     }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    if (failed.get()) -1L else (calls.get() / seconds(t0)).round
   }
+
+  /** One query's measurement: an untimed warm pass that also counts the
+    * rows, then two timed noop writes; the wall is the faster run (the
+    * second has warm code caches). The timed action is a noop-sink write,
+    * NOT count(): count() lets Catalyst prune every projected column, the
+    * noop sink materializes every output row with all its columns.
+    *
+    * A throw in ANY pass makes the query failed (`None`): it counts in
+    * `failed`, adds no wall to any total, and its exception is named on
+    * stderr. */
+  private[graft] def measure(spark: SparkSession, name: String,
+                             query: () => DataFrame): Option[(Double, Long)] =
+    try {
+      val w0 = System.nanoTime()
+      val rows = query().count()
+      val warmSec = seconds(w0)
+      val runs = (0 until 2).map { _ =>
+        val g0 = gcMillis
+        val t0 = System.nanoTime()
+        try {
+          query().write.format("noop").mode("overwrite").save()
+          (seconds(t0), gcMillis - g0)
+        } finally {
+          spark.catalog.clearCache() // drop per-query persisted intermediates
+          System.gc() // reap dead broadcasts/shuffles outside timed windows
+        }
+      }
+      // stderr (never the stdout tail): warm-pass cost, both raw runs, and
+      // the GC time each timed window absorbed
+      System.err.println(f"[bench] $name%-24s warm=$warmSec%7.2fs " +
+        runs.map { case (dt, gc) => f"run=$dt%7.2fs(gc=${gc}ms)" }.mkString(" "))
+      Some((runs.map(_._1).min, rows))
+    } catch { case t: Throwable =>
+      System.err.println(s"[bench] $name failed: $t")
+      None
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    sys.env.get("SPARK_GRAFT_COLD_QUERY") match {
-      case Some(qs) =>
-        coldProbe(qs.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-          sfDir, cpus)
-        return
-      case None => ()
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The bounded top-k / calendar-spine windows (Relevance, SyntheticMarket)
-    // are single-partition BY CONSTRUCTION, but WindowExecBase WARNs on every
-    // execution — and the driver keeps only the last 2000 chars of stdout, so
-    // the flood is what the tail would carry. Silence the window package
-    // only; every other WARN still surfaces.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.local()
     // warm the JVM / codegen / file listing so the first timed query isn't
     // charged for session startup
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => () }
+    lane("warm-up", ()) { spark.read.parquet(s"$sfDir/lineitem.parquet").count(); () }
     // Charge MarketStore materialization to its OWN line instead of the warm
     // pass of whichever api_*/dq_* query happens to iterate first: the store
     // build is a real one-off ingest cost (every later read is parquet), and
     // keeping it out of the per-query numbers is what makes them comparable
-    // to standalone PlanAudit runs (judge r6 "make the bench trustworthy").
-    val storeT0 = System.nanoTime()
-    try graft.domain.MarketStore.cached(spark, sfDir)
-    catch { case _: Throwable => () }
-    val storeSec = (System.nanoTime() - storeT0) / 1e9
-    // Same one-off treatment for the served-ANN index (r8): build + persist
-    // once here so ann_ivfpq_served's timed runs measure SERVING (the
+    // to standalone PlanAudit runs.
+    val storeSec = lane("store_build", -1.0) {
+      val t0 = System.nanoTime()
+      graft.domain.MarketStore.cached(spark, sfDir)
+      seconds(t0)
+    }
+    // Same one-off treatment for the served-ANN indexes: build + persist
+    // once here so the *_served queries' timed runs measure SERVING (the
     // 100 TB steady state), with the build cost on its own line.
-    val idxT0 = System.nanoTime()
-    try {
+    val idxSec = lane("index_build", -1.0) {
+      val t0 = System.nanoTime()
       val e = graft.sources.TestData(spark, sfDir).embeddings
       graft.ann.Pq.cachedIndex(e, "vec_id", "embedding", sfDir,
         nLists = 16, m = 8, dsub = 8, ksub = 16, lloydIters = 0)
@@ -251,17 +134,16 @@ object Bench {
       // the graph rung's served artifacts too (ann_graph_served)
       graft.ann.GraphAnn.cachedIndex(e, "vec_id", "embedding", sfDir,
         nLists = 16, degree = 12)
-    } catch { case _: Throwable => () }
-    val idxSec = (System.nanoTime() - idxT0) / 1e9
-    // Streaming HARNESS overhead, isolated (judge r7 item 8): an identity
-    // readStream → file-sink replay over each streaming fixture (projected
-    // to one column so sink bytes stay negligible) pays exactly the
-    // per-gate machinery — query start/stop, micro-batch planning, source
-    // listing, checkpoint, sink commit — with a ~zero-cost operator. The
-    // stream family's seconds minus ~6× this per-fixture figure is
-    // attributable operator cost at a glance.
-    val shT0 = System.nanoTime()
-    val streamHarnessSec = try {
+      seconds(t0)
+    }
+    // Streaming HARNESS overhead, isolated: an identity readStream →
+    // file-sink replay over each streaming fixture (projected to one column
+    // so sink bytes stay negligible) pays exactly the per-gate machinery —
+    // query start/stop, micro-batch planning, source listing, checkpoint,
+    // sink commit — with a ~zero-cost operator. The stream family's seconds
+    // minus ~6× this per-fixture figure is attributable operator cost.
+    val streamHarnessSec = lane("stream_harness", -1.0) {
+      val t0 = System.nanoTime()
       Seq("documents.parquet" -> "doc_id", "events.parquet" -> "event_id")
         .foreach { case (f, idCol) =>
           val p = s"$sfDir/$f"
@@ -273,19 +155,17 @@ object Bench {
             s"harness_${f.takeWhile(_ != '.')}")
             .write.format("noop").mode("overwrite").save()
         }
-      (System.nanoTime() - shT0) / 1e9
-    } catch { case _: Throwable => -1.0 }
-    // Serving-latency lane (judge r11 item 2): BASELINE.md's only
-    // query-engine numbers are the prior-gen SQLite POINT-QUERY latencies
-    // (30 ms avg / 85 ms p99 / 1500+ QPS) — grade that axis directly.
-    // Warm per-call wall time over the MATERIALIZED store on the three
-    // canonical point-query shapes a backtester issues per bar: one-symbol
+      seconds(t0)
+    }
+    // Planner floor: BASELINE.md's only query-engine numbers are the
+    // prior-gen SQLite POINT-QUERY latencies (30 ms avg / 85 ms p99 /
+    // 1500+ QPS). Warm per-call wall over the MATERIALIZED store on the
+    // three point-query shapes a backtester issues per bar: one-symbol
     // price range, one-date fundamentals as-of, one-date status. Each call
-    // is a full plan→schedule→collect round trip (the honest Spark cost;
-    // nothing is cached across calls beyond the store's parquet files and
-    // code paths). avg/p99 land on their own JSON fields like store_build.
-    val latencySamples: Seq[Double] = try {
-      import org.apache.spark.sql.functions.{col, lit}
+    // is a full plan→schedule→collect round trip — the floor a user pays
+    // only if they skip PointServe (serving_ms is the real serving number).
+    val latencySamples: Seq[Double] = lane("planner_floor", Seq.empty[Double]) {
+      import org.apache.spark.sql.functions.col
       val api = graft.api.PTradeApi(graft.domain.MarketStore.cached(spark, sfDir))
       val sym = Seq("000001.SZ")
       val oneDate = spark.sql("SELECT DATE '1996-06-03' AS qdate")
@@ -294,219 +174,86 @@ object Bench {
         () => { api.getFundamentalsAsOf(sym, oneDate).collect(); () },
         () => { api.getStockStatus("1997-03-03").filter(col("is_halt")).collect(); () })
       shapes.foreach { f => f(); f() } // warm code/plan caches per shape
-      (0 until 40).flatMap(_ => shapes.map { f =>
-        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e6
-      })
-    } catch { case _: Throwable => Seq.empty }
-    val (latAvg, latP99) =
-      if (latencySamples.isEmpty) (-1.0, -1.0)
-      else {
-        val sorted = latencySamples.sorted
-        (latencySamples.sum / latencySamples.size,
-          sorted(math.min(sorted.size - 1, (sorted.size * 99) / 100)))
-      }
-    // Warm serving lane (judge r12 item 3): the SAME three shapes answered
-    // by graft.api.PointServe — the in-process index over the published
-    // store artifacts that SCALE.md's "publish artifacts, serve elsewhere"
-    // prescribes (the prior-gen 30 ms baseline was SQLite doing exactly
-    // this). Loader cost on serving_build; per-call ms on serving_ms.
-    val servT0 = System.nanoTime()
-    val (servingSamples, servingBuildSec, servingQps): (Seq[Double], Double, Long) = try {
-      val ps = graft.api.PointServe.load(
-        graft.domain.MarketStore.cached(spark, sfDir))
-      val buildSec = (System.nanoTime() - servT0) / 1e9
-      val sym = Seq("000001.SZ")
-      val shapes: Array[() => Unit] = Array(
-        () => { ps.price(sym, "1996-03-01", "1996-03-31"); () },
-        () => { ps.fundamentalsAsOf(sym, "1996-06-03"); () },
-        () => { ps.haltedOn("1997-03-03"); () })
-      shapes.foreach { f => f(); f() } // warm
-      val samples = (0 until 40).flatMap(_ => shapes.map { f =>
-        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e6
-      })
-      // Concurrent-load twin (judge r13 item 7): the prior-gen baseline row
-      // also claims 1,500+ QPS at 150 concurrent clients. PointServe is
-      // immutable primitive arrays — no locks, no shared mutable state —
-      // so throughput should scale with threads; MEASURE it instead of
-      // asserting it: 16 hammer threads round-robin the same three shapes
-      // for a 2 s window, report completed calls per second.
-      val nThreads = 16
-      val calls = new java.util.concurrent.atomic.AtomicLong(0L)
-      val t0 = System.nanoTime()
-      val deadline = t0 + 2000000000L
-      // A throw inside a worker kills only that thread (ADVICE r14): without
-      // the flag a partially-failing shape silently DEFLATES the reported
-      // QPS instead of surfacing. Any dead hammer thread -> qps16 = -1.
-      val hammerFailed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val threads = (0 until nThreads).map { tid =>
-        new Thread(() => {
-          try {
-            var i = tid
-            while (System.nanoTime() < deadline && !hammerFailed.get()) {
-              shapes(i % shapes.length)(); calls.incrementAndGet(); i += 1
-            }
-          } catch { case t: Throwable =>
-            hammerFailed.set(true)
-            System.err.println(s"[bench] qps16 hammer thread died: $t")
-          }
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val qps = if (hammerFailed.get()) -1L
-        else (calls.get() / ((System.nanoTime() - t0) / 1e9)).round
-      (samples, buildSec, qps)
-    } catch { case _: Throwable => (Seq.empty, -1.0, -1L) }
-    val (servAvg, servP99) =
-      if (servingSamples.isEmpty) (-1.0, -1.0)
-      else {
-        val sorted = servingSamples.sorted
-        (servingSamples.sum / servingSamples.size,
-          sorted(math.min(sorted.size - 1, (sorted.size * 99) / 100)))
-      }
-    // Warm ANN serving lane (judge r15 item 3): the PointServe discipline
-    // applied to the served IVF-PQ artifacts — graft.ann.AnnServe loads them
-    // once into primitive arrays; each call is a pure JVM probe + ADC scan,
-    // bit-identical to Pq.topKFromIndex (PqSpec pins it). Target: ≪ the
-    // ~380 ms planner floor a Spark-plan top-k pays per query; comparator is
-    // the same prior-gen 1,500+ QPS row the market lane grades against.
-    val annT0 = System.nanoTime()
-    val (annSamples, annFiltered, annBuildSec, annQps)
-        : (Seq[Double], Seq[Double], Double, Long) = try {
-      import org.apache.spark.sql.functions.col
-      val e = graft.sources.TestData(spark, sfDir).embeddings
-      val idx = graft.ann.Pq.cachedIndex(e, "vec_id", "embedding", sfDir,
-        nLists = 16, m = 8, dsub = 8, ksub = 16, lloydIters = 0)
-      val serve = graft.ann.AnnServe.load(idx)
-      val buildSec = (System.nanoTime() - annT0) / 1e9
-      val qvecs = e.filter(col("vec_id") < 32)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      qvecs.take(4).foreach { case (qid, qv) => serve.topK(qid, qv, 5, 4) } // warm
-      val samples = (0 until 120).map { i =>
-        val (qid, qv) = qvecs(i % qvecs.length)
-        val t0 = System.nanoTime()
-        serve.topK(qid, qv, 5, 4)
-        (System.nanoTime() - t0) / 1e6
-      }
-      // the FILTERED serving shape (judge r16 item 5): attribute pre-filter
-      // during the cell scan — the most common production retrieval query
-      val allowed: java.util.function.LongPredicate = (cid: Long) => cid % 3 == 0
-      serve.topK(qvecs.head._1, qvecs.head._2, 5, 4, allowed) // warm
-      val filtered = (0 until 40).map { i =>
-        val (qid, qv) = qvecs(i % qvecs.length)
-        val t0 = System.nanoTime()
-        serve.topK(qid, qv, 5, 4, allowed)
-        (System.nanoTime() - t0) / 1e6
-      }
-      val calls = new java.util.concurrent.atomic.AtomicLong(0L)
-      val t0 = System.nanoTime()
-      val deadline = t0 + 2000000000L
-      val hammerFailed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val threads = (0 until 16).map { tid =>
-        new Thread(() => {
-          try {
-            var i = tid
-            while (System.nanoTime() < deadline && !hammerFailed.get()) {
-              val (qid, qv) = qvecs(i % qvecs.length)
-              serve.topK(qid, qv, 5, 4); calls.incrementAndGet(); i += 1
-            }
-          } catch { case t: Throwable =>
-            hammerFailed.set(true)
-            System.err.println(s"[bench] ann qps16 hammer thread died: $t")
-          }
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val qps = if (hammerFailed.get()) -1L
-        else (calls.get() / ((System.nanoTime() - t0) / 1e9)).round
-      (samples, filtered, buildSec, qps)
-    } catch { case t: Throwable =>
-      System.err.println(s"[bench] ann serving lane failed: $t")
-      (Seq.empty, Seq.empty, -1.0, -1L)
+      (0 until 40).flatMap(_ => shapes.map(millis))
     }
-    val (annAvg, annP99) =
-      if (annSamples.isEmpty) (-1.0, -1.0)
-      else {
-        val sorted = annSamples.sorted
-        (annSamples.sum / annSamples.size,
-          sorted(math.min(sorted.size - 1, (sorted.size * 99) / 100)))
+    // Warm serving lane: the SAME three shapes answered by
+    // graft.api.PointServe — the in-process index over the published store
+    // artifacts that SCALE.md's "publish artifacts, serve elsewhere"
+    // prescribes. Loader cost on build_sec; per-call ms on serving_ms; the
+    // prior-gen baseline's 1,500+ QPS claim is graded by qps16 (PointServe
+    // is immutable primitive arrays, so throughput should scale).
+    val (servingSamples, servingBuildSec, servingQps) =
+      lane("serving", (Seq.empty[Double], -1.0, -1L)) {
+        val t0 = System.nanoTime()
+        val ps = graft.api.PointServe.load(
+          graft.domain.MarketStore.cached(spark, sfDir))
+        val buildSec = seconds(t0)
+        val sym = Seq("000001.SZ")
+        val shapes: Array[() => Unit] = Array(
+          () => { ps.price(sym, "1996-03-01", "1996-03-31"); () },
+          () => { ps.fundamentalsAsOf(sym, "1996-06-03"); () },
+          () => { ps.haltedOn("1997-03-03"); () })
+        shapes.foreach { f => f(); f() } // warm
+        val samples = (0 until 40).flatMap(_ => shapes.toSeq.map(millis))
+        (samples, buildSec, qps16("serving")(i => shapes(i % shapes.length)()))
       }
-    val annFilteredAvg =
-      if (annFiltered.isEmpty) -1.0 else annFiltered.sum / annFiltered.size
+    // Warm ANN serving lane: the PointServe discipline applied to the
+    // served IVF-PQ artifacts — graft.ann.AnnServe loads them once into
+    // primitive arrays; each call is a pure JVM probe + ADC scan,
+    // bit-identical to Pq.topKFromIndex (PqSpec pins it). Target: ≪ the
+    // planner floor a Spark-plan top-k pays per query.
+    val (annSamples, annFiltered, annBuildSec, annQps) =
+      lane("ann_serving", (Seq.empty[Double], Seq.empty[Double], -1.0, -1L)) {
+        import org.apache.spark.sql.functions.col
+        val t0 = System.nanoTime()
+        val e = graft.sources.TestData(spark, sfDir).embeddings
+        val idx = graft.ann.Pq.cachedIndex(e, "vec_id", "embedding", sfDir,
+          nLists = 16, m = 8, dsub = 8, ksub = 16, lloydIters = 0)
+        val serve = graft.ann.AnnServe.load(idx)
+        val buildSec = seconds(t0)
+        val qvecs = e.filter(col("vec_id") < 32)
+          .select(col("vec_id"), col("embedding")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        def call(i: Int, allowed: Option[java.util.function.LongPredicate] = None): Unit = {
+          val (qid, qv) = qvecs(i % qvecs.length)
+          allowed match {
+            case None => serve.topK(qid, qv, 5, 4)
+            case Some(p) => serve.topK(qid, qv, 5, 4, p)
+          }
+        }
+        (0 until 4).foreach(call(_)) // warm
+        val samples = (0 until 120).map(i => millis(() => call(i)))
+        // the FILTERED serving shape: attribute pre-filter during the cell
+        // scan — the most common production retrieval query
+        val allowed = Some[java.util.function.LongPredicate]((cid: Long) => cid % 3 == 0)
+        call(0, allowed) // warm
+        val filtered = (0 until 40).map(i => millis(() => call(i, allowed)))
+        (samples, filtered, buildSec, qps16("ann")(call(_)))
+      }
+    val (latAvg, latP99) = avgP99(latencySamples)
+    val (servAvg, servP99) = avgP99(servingSamples)
+    val (annAvg, annP99) = avgP99(annSamples)
+    val annFilteredAvg = avgP99(annFiltered)._1
     // optional comma-separated filter for fast single-query iteration
     // (mirrors graft.Verify's 3rd arg)
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(f =>
       SparkEntry.queries.filter { case (k, _) => f(k) })
-    // Load-average precondition (judge r14 item 5): per-query cost crept
-    // ~7%/round across r12–r14 while every flag adjudicated "noise" — the
-    // box, not the code. Make the closing number comparable BY CONSTRUCTION:
-    // record the 1-min loadavg at launch, and if the box is visibly busy
-    // (above max(6, cpus/2) — idle-VM load here runs 4–6) wait up to 60 s
-    // for it to settle before the timed loop. Both readings + the wait ship
-    // in the artifact so a hot-box run is self-describing.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val loadAtLaunch = osBean.getSystemLoadAverage
-    // r16 (judge r15 item 5): the old max(6, cpus/2) never engaged on this
-    // 32-CPU box (threshold 16) even though its measured noise signature
-    // appears at load ~4–5 — the r15 driver bench launched at 5.32 with
-    // waited_s=0 and produced 16 flags. Engage at the noise onset instead.
-    val loadThreshold = math.max(2.0, cpus.toDouble / 8.0)
-    var loadWaitedSec = 0
-    while (osBean.getSystemLoadAverage > loadThreshold && loadWaitedSec < 60) {
-      Thread.sleep(10000); loadWaitedSec += 10
+    val results = selected.toSeq.map { case (name, fn) =>
+      name -> measure(spark, name, () => fn(spark, sfDir))
     }
-    val loadAtStart = osBean.getSystemLoadAverage
-    if (loadWaitedSec > 0)
-      System.err.println(f"[bench] loadavg precondition: waited ${loadWaitedSec}s " +
-        f"($loadAtLaunch%.1f -> $loadAtStart%.1f, threshold $loadThreshold%.1f)")
-    // Timed action = a noop-sink write, NOT count(): under count() Catalyst
-    // prunes every projected column, so scan/project queries would be billed
-    // for less work than they claim; the noop sink materializes every output
-    // row with all columns and discards it.
-    // min of two runs per query: the second run has warm code caches, so
-    // the min reflects steady-state cost rather than JIT/classload noise.
-    val results = selected.map { case (name, fn) =>
-      // untimed first pass doubles as warmup and captures the row count
-      val w0 = System.nanoTime()
-      val rows = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-      val warmSec = (System.nanoTime() - w0) / 1e9
-      val runs = (0 until 2).map { _ =>
-        val g0 = gcMillis
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val gc = gcMillis - g0
-        spark.catalog.clearCache() // drop per-query persisted intermediates
-        System.gc() // reap dead broadcasts/shuffles outside timed windows
-        (dt, gc)
-      }
-      // stderr (never the stdout tail): enough to attribute any in-bench
-      // distortion — warm-pass cost, both raw runs, and the GC time each
-      // timed window absorbed
-      System.err.println(f"[bench] $name%-24s warm=$warmSec%7.2fs " +
-        runs.map { case (dt, gc) => f"run=$dt%7.2fs(gc=${gc}ms)" }.mkString(" "))
-      name -> (runs.map(_._1).min, rows)
-    }
-    // The driver captures only the LAST 2000 chars of stdout; with 60+
-    // queries a full-precision line plus a per-query rows/s map overflows
-    // that buffer and truncates the {"metric":...} headline (observed in
-    // BENCH_r01..r03). Keep the single JSON line short: 3-decimal seconds,
-    // aggregate rows/s only. Per-query rows/s remains available locally via
-    // tools/PlanAudit.
-    // Locale.ROOT: under a comma-decimal default locale "%.3f" would emit
-    // "1,234" and corrupt the JSON line.
+    val ok = results.collect { case (k, Some(r)) => k -> r }
+    val failed = results.count(_._2.isEmpty)
+    // The bench harness that parses this line keeps only the LAST 2000
+    // chars of stdout, so the line stays short: 3-decimal total, 2-decimal maps (run-to-run variance is
+    // far above the third decimal), EVERY family's summed seconds (no
+    // family is ever silently dropped) and only the top-10 slowest queries
+    // — both O(1)-sized as the query count grows. Locale.ROOT: under a
+    // comma-decimal default locale "%.3f" would emit "1,234" and corrupt
+    // the JSON line.
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // per-query map at 2 decimals: run-to-run variance on this box is ±30%,
-    // so the third decimal is noise — and ~80 queries × 1 char is the
-    // difference between fitting the driver's 2000-char tail and not.
     def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    // Per-query maps stopped fitting the driver's 2000-char tail around 85
-    // queries, so the headline reports (a) EVERY family's summed seconds —
-    // no family is ever silently dropped — and (b) only the top-10 slowest
-    // individual queries. Both stay O(1)-sized as the query count grows.
     def family(name: String): String =
       if (name.startsWith("api")) "api"
       else if (name.startsWith("ann") || name.startsWith("emb")) "ann"
@@ -518,223 +265,25 @@ object Bench {
         "pack", "sample", "quantiles", "cms", "tok", "hll",
         "jsonl").exists(name.startsWith)) "corpus"
       else "core"
-    val fams = results.toSeq.groupBy { case (k, _) => family(k) }
+    val fams = ok.groupBy { case (k, _) => family(k) }
       .map { case (f, rs) => f -> rs.map(_._2._1).sum }
       .toSeq.sortBy(-_._2)
       .map { case (f, v) => "\"" + f + "\":" + f2(v) }
       .mkString("{", ",", "}")
-    val qs = results.toSeq.sortBy { case (_, (v, _)) => -v }.take(10)
+    val qs = ok.sortBy { case (_, (v, _)) => -v }.take(10)
       .map { case (k, (v, _)) => "\"" + k + "\":" + f2(v) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
-    // rows_per_sec counts only queries that produced rows; a failed query
-    // (rows = -1 sentinel) contributes neither rows nor time, so a failure
-    // deflates nothing silently — it is surfaced via "failed" instead.
-    val ok = results.values.filter { case (_, n) => n >= 0 }
-    val okRows = ok.map(_._2).sum
-    val okTime = ok.map(_._1).sum
-    val failed = results.values.count { case (_, n) => n < 0 }
-    val rps = if (okTime > 0) (okRows / okTime).round else -1L
-    // Regression alarm (judge r10 item 8, non-ratcheting form per the r11
-    // verdict): docs/BENCH_PERQ.tsv keeps the last THREE full-run seconds
-    // per query (most recent first), and the comparison baseline is the
-    // MIN of that window — one noisy slow run can no longer inflate the
-    // baseline and mask the next real regression, while a genuine slowdown
-    // self-heals out of the window after three runs. The file is tagged
-    // with the CPU count (`#cpus=N` header): numbers from different
-    // local[N] settings are incomparable (r11 lesson), so a mismatched
-    // header discards the history instead of comparing across it.
-    // Self-reported BEFORE the metric line: the driver's 2000-char stdout
-    // tail then carries both, and if anything is cut it is this line,
-    // never the headline. Noise gate: ±30% run-to-run variance on this
-    // box, so a regression must be both > +0.30 s and > 1.3× to print.
-    // Filtered runs neither compare nor touch the baseline.
-    // Self-adjudication (judge r12 item 2): four consecutive closing
-    // benches ran on a hot box, so the driver-visible artifact chronically
-    // overstated the slow tail and the exoneration lived in a side doc.
-    // Now the alarm closes its own loop IN-BAND: each flagged query is
-    // re-measured 3× (min) before the JSON line is emitted, and the
-    // verdicts ship INSIDE the artifact ("flagged" field) — "noise" when
-    // the re-measure lands back inside the gate (≤1.3× baseline or
-    // ≤+0.30 s), "regressed" when it stays out. The per-query history then
-    // records the best same-run measurement, so one hot first pass cannot
-    // poison the window.
-    // (name, prevMin, run, remeasure3xMin, coldFloor, verdict); -1 = not run
-    var flaggedVerdicts: Seq[(String, Double, Double, Double, Double, String)] = Seq.empty
-    // canary ratio vs the stored window (-1 = no baseline) and the number
-    // of flags suppressed by the era gate (0 = gate did not engage)
-    var canaryRatio: Double = -1.0
-    var eraFlags: Int = 0
-    // per-query history is comparable only within one (cpus, sf) setting;
-    // cpus rides the file header (r11 lesson), and a non-default sf gets
-    // its OWN file so an sf0.01 shakeout run can never clobber the graded
-    // sf0.1 window
-    val perqPath = java.nio.file.Paths.get(
-      if (sfDir == "/root/testdata/sf0.1") "docs/BENCH_PERQ.tsv"
-      else s"docs/BENCH_PERQ_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}.tsv")
-    if (only.isEmpty) {
-      val lines: Seq[String] =
-        if (java.nio.file.Files.exists(perqPath))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(perqPath)).asScala.toSeq
-        else Seq.empty
-      val headerOk = lines.headOption match {
-        case Some(h) if h.startsWith("#cpus=") => h == s"#cpus=$cpus"
-        case _ => true // legacy headerless file: accept as seed history
-      }
-      val hist: Map[String, Seq[Double]] =
-        if (!headerOk) Map.empty
-        else lines.filterNot(_.startsWith("#"))
-          .flatMap { l =>
-            val parts = l.split("\t")
-            if (parts.length >= 2)
-              scala.util.Try(
-                parts.head -> parts.tail.toSeq.map(_.toDouble)).toOption
-            else None
-          }.toMap
-      val (regs, unmeasured) = selectRegressions(
-        results.map { case (k, (v, _)) => k -> v }.toMap, hist)
-      // Canary window (judge r18 item 1, third leg): the pure-JVM
-      // serving_ms canary's last-3 values ride the PERQ file on their own
-      // `#canary=` line (comment-prefixed: invisible to the legacy parse).
-      val canaryHist: Seq[Double] =
-        if (!headerOk) Seq.empty
-        else lines.find(_.startsWith("#canary="))
-          .map(_.stripPrefix("#canary=").split("\t").toSeq
-            .flatMap(s => scala.util.Try(s.toDouble).toOption))
-          .getOrElse(Seq.empty)
-      canaryRatio = eraRatio(servAvg, canaryHist)
-      val eraDrifted = canaryRatio > EraDriftRatio &&
-        (regs.nonEmpty || unmeasured.nonEmpty)
-      // Cool-down before the re-measure loop (judge r15 item 5): the
-      // re-measures otherwise inherit the run's own heat — a 300-query JVM
-      // finishing its timed loop leaves GC debt and a hot box behind, and
-      // an inflated re-measure can only CONFIRM a flag, never exonerate it
-      // (the cold-floor lesson). Drain caches, collect, and give the box up
-      // to 30 s to drop back under the launch threshold.
-      if (regs.nonEmpty && !eraDrifted) {
-        spark.catalog.clearCache(); System.gc()
-        var cooled = 0
-        while (osBean.getSystemLoadAverage > loadThreshold && cooled < 30) {
-          Thread.sleep(5000); cooled += 5
-        }
-        if (cooled > 0)
-          System.err.println(s"[bench] re-measure cool-down: ${cooled}s " +
-            f"(loadavg now ${osBean.getSystemLoadAverage}%.1f)")
-      }
-      // In-band 3× re-measure lane. A throwing run must NOT enter the min
-      // (ADVICE r13): its near-zero wall time would fake a "noise" verdict
-      // and write a bogus ~0 s floor into the PERQ baseline. Failed runs
-      // are dropped; all-three-failed -> -1 sentinel (remeasure_failed).
-      def remeasure3x(k: String): Double = {
-        val fn = selected(k)
-        val reOk = (0 until 3).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case _: Throwable => false }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache(); System.gc()
-          if (ok) Some(dt) else None
-        }
-        if (reOk.nonEmpty) reOk.min else -1.0
-      }
-      // COLD-FLOOR self-adjudication (judge r16 item 2, r18 item 1): every
-      // verdict the in-band re-measure could not close — `regressed` — AND
-      // every overflow flag gets a SOLO fresh-JVM floor before the headline
-      // JSON is emitted (no shared batch JVM: batch-probed floors measured
-      // ~1.3× solo in r17 — GC debt from earlier probes inflates later
-      // ones). The `unmeasured_cold_*` verdict class is gone.
-      flaggedVerdicts = adjudicateFlags(regs, unmeasured, eraDrifted,
-        remeasure = k => {
-          val re = remeasure3x(k)
-          System.err.println(f"[bench] flagged $k%-24s remeasure3x=${f2(re)}s")
-          re
-        },
-        coldFloor = k => {
-          System.err.println(s"[bench] solo cold-floor probe: $k")
-          coldFloors(Seq(k), sfDir, cpus).getOrElse(k, -1.0)
-        })
-      flaggedVerdicts.foreach { case (k, p, v, re, cold, verdict) =>
-        System.err.println(
-          f"[bench] flagged $k%-24s prev=${f2(p)}s run=${f2(v)}s re=${f2(re)}s cold=${f2(cold)}s -> $verdict")
-      }
-      eraFlags = if (eraDrifted) flaggedVerdicts.size else 0
-      val regLine =
-        if (hist.isEmpty) "[bench] regressions: no prior per-query baseline"
-        else if (eraDrifted)
-          f"[bench] ERA DRIFT (canary ${f2(canaryRatio)}x its window min): " +
-            s"${flaggedVerdicts.size} flags suppressed — adjudicate by worktree " +
-            "differential on a calm box; PERQ history untouched"
-        else if (flaggedVerdicts.isEmpty) "[bench] regressions vs min-of-last-3: none (>+0.30s & >1.3x)"
-        else "[bench] regressions vs min-of-last-3: " + flaggedVerdicts.map {
-          case (k, p, v, re, cold, verdict) =>
-            f"$k:+${f2(v - p)}s(${f2(p)}->${f2(v)},re=${f2(re)},cold=${f2(cold)},$verdict)"
-        }.mkString(" ")
-      println(regLine)
-      // History update — SKIPPED WHOLESALE under era drift: appending
-      // era-inflated values would push clean-era minima out of the 3-run
-      // window. Otherwise each adjudicated flag records the best of
-      // (run, remeasure); SOLO COLD FLOORS ARE EXCLUDED (r17 ADVICE low:
-      // a fresh-JVM floor is measured under different conditions than the
-      // in-band runs the window exists to compare, and seeding the min
-      // with it manufactures future flags).
-      if (!eraDrifted) {
-        val adjMin = flaggedVerdicts.collect {
-          case (k, _, v, re, _, vd)
-              if vd != "remeasure_failed" && vd != "cold_failed" =>
-            k -> Seq(v, re).filter(_ > 0).min
-        }.toMap
-        val unadjudicated = flaggedVerdicts.collect {
-          case (k, _, _, _, _, vd)
-              if vd == "remeasure_failed" || vd == "cold_failed" => k
-        }.toSet
-        val canaryLine =
-          if (servAvg > 0)
-            Seq(s"#canary=" + (f2(servAvg) +: canaryHist.take(2).map(f2))
-              .mkString("\t"))
-          else if (canaryHist.nonEmpty)
-            Seq(s"#canary=" + canaryHist.take(3).map(f2).mkString("\t"))
-          else Seq.empty
-        java.nio.file.Files.write(perqPath,
-          (Seq(s"#cpus=$cpus") ++ canaryLine ++ results.toSeq.sortBy(_._1)
-            .map { case (k, (v, _)) =>
-              val window =
-                if (unadjudicated(k)) hist.getOrElse(k, Nil).take(3).map(f2)
-                else f2(adjMin.getOrElse(k, v)) +: hist.getOrElse(k, Nil).take(2).map(f2)
-              window.mkString(s"$k\t", "\t", "") })
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
-      } else System.err.println(
-        "[bench] era drift: PERQ history left untouched")
-    }
-    // cap the artifact's flagged map at 12 entries so a pathological round
-    // can't blow the 2000-char stdout tail; the overflow COUNT still ships.
-    // Under era drift the per-query entries are suppressed entirely
-    // (`era_flags` carries the count, `canary_ratio` the evidence): ~100
-    // era-inflated flags are one fact about the box, not 100 about queries.
-    val flaggedShown =
-      if (eraFlags > 0) Seq.empty else flaggedVerdicts.take(12)
-    val flaggedDropped =
-      if (eraFlags > 0) 0 else flaggedVerdicts.size - flaggedShown.size
-    // entry shape: [prev_min, this_run, remeasure_3x_min, cold_floor, verdict]
-    val flaggedJson = flaggedShown.map { case (k, p, v, re, cold, verdict) =>
-      s""""$k":[${f2(p)},${f2(v)},${f2(re)},${f2(cold)},"$verdict"]"""
-    }.mkString("{", ",", "}")
-    // "flagged": in-artifact adjudicated verdicts ([prev_min, this_run,
-    // remeasure_3x_min, cold_floor, verdict] — cold_floor from a fresh
-    // probe JVM, -1 = not needed); empty {} = the alarm line was clean.
-    // "baseline_policy": how to read it — see docs/BENCH_POLICY.md.
-    // "planner_floor_ms" (née latency_ms, judge r14 item 8): the cold
-    // Spark plan→schedule→collect round trip per point query — the
-    // PLANNER FLOOR a user pays only if they skip PointServe (serving_ms
-    // is the real serving number). Renamed so the artifact says what it
-    // measures.
+    // failed queries contribute neither rows nor time: a failure deflates
+    // nothing silently — it is surfaced via "failed" instead
+    val total = ok.map(_._2._1).sum
+    val okRows = ok.map(_._2._2).sum
+    val rps = if (total > 0) (okRows / total).round else -1L
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","families":$fams,"queries":$qs,"store_build":${f2(storeSec)},"index_build":${f2(idxSec)},"stream_harness":${f2(streamHarnessSec)},"planner_floor_ms":{"avg":${f2(latAvg)},"p99":${f2(latP99)},"n":${latencySamples.size}},"serving_ms":{"avg":${f3(servAvg)},"p99":${f3(servP99)},"n":${servingSamples.size},"build_sec":${f2(servingBuildSec)},"qps16":$servingQps},"ann_serving_ms":{"avg":${f3(annAvg)},"p99":${f3(annP99)},"n":${annSamples.size},"filtered_avg":${f3(annFilteredAvg)},"build_sec":${f2(annBuildSec)},"qps16":$annQps},"flagged":$flaggedJson,"flagged_dropped":$flaggedDropped,"canary_ratio":${f2(canaryRatio)},"era_flags":$eraFlags,"loadavg":{"launch":${f2(loadAtLaunch)},"start":${f2(loadAtStart)},"waited_s":$loadWaitedSec},"baseline_policy":"min-of-last-3@cpus=$cpus","rows_per_sec":$rps,"failed":$failed,"n_queries":${results.size},"sf":"$sfDir"}"""
-    // The driver keeps only the last 2000 chars of stdout; warn (stderr, so
-    // it can't displace the metric line) before truncation becomes possible.
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","families":$fams,"queries":$qs,"store_build":${f2(storeSec)},"index_build":${f2(idxSec)},"stream_harness":${f2(streamHarnessSec)},"planner_floor_ms":{"avg":${f2(latAvg)},"p99":${f2(latP99)},"n":${latencySamples.size}},"serving_ms":{"avg":${f3(servAvg)},"p99":${f3(servP99)},"n":${servingSamples.size},"build_sec":${f2(servingBuildSec)},"qps16":$servingQps},"ann_serving_ms":{"avg":${f3(annAvg)},"p99":${f3(annP99)},"n":${annSamples.size},"filtered_avg":${f3(annFilteredAvg)},"build_sec":${f2(annBuildSec)},"qps16":$annQps},"rows_per_sec":$rps,"failed":$failed,"n_queries":${results.size},"sf":"$sfDir"}"""
+    // warn on stderr (so it can't displace the metric line) before the
+    // 2000-char tail could truncate it
     if (line.length > 1900)
-      System.err.println(s"WARNING: bench metric line is ${line.length} chars; driver tail is 2000 — trim the query map")
+      System.err.println(s"WARNING: bench metric line is ${line.length} chars; the parsed tail is 2000 — trim the query map")
     println(line)
     spark.stop()
   }

@@ -29,19 +29,10 @@ object Sessions {
     // The deliberate single-partition windows (bounded top-k, the
     // broadcast-sized centroid ranking in Ann.hierarchicalAssign) WARN on
     // every execution; they are single-partition BY CONSTRUCTION, so the
-    // flood is noise (Bench has silenced this package since r7 — Verify and
-    // the tools get the same treatment).
+    // flood is noise.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)
-    spark
-  }
-
-  /** Apply the engine-required settings to an externally built session. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
 }

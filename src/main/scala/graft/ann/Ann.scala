@@ -205,7 +205,11 @@ object Ann {
         Window.partitionBy("query_id").orderBy(col("dist").asc, col("centroid_id").asc)))
       .filter(col("pr") <= nProbe)
       .select("query_id", "qv", "centroid_id")
-    val scored = probes.join(cells, "centroid_id")
+    // the probe set is |queries|·nProbe rows, a query batch: broadcast it
+    // up front. Left to AQE, the join is planned sort-merge and converted
+    // only when the probe side's stage finishes, so whether the cells side
+    // gets shuffled first depends on which stage wins the race.
+    val scored = broadcast(probes).join(cells, "centroid_id")
       .filter(col("query_id") =!= col("cid"))
       .withColumn("cos", round(cosine(col("qv"), col("cv")), 6))
     scored.withColumn("rank", row_number().over(

@@ -290,6 +290,9 @@ final class SortedPairsKernel(elemType: DataType) extends Serializable {
 
   def apply(ids: ArrayData): ArrayData = {
     val b = ids.numElements()
+    // the largest b whose b*(b-1) still fits an Int
+    require(b <= 46341, s"sortedPairs: $b ids in one array exceed 46341 " +
+      "(b*(b-1)/2 pairs would overflow Int)")
     val out = new Array[Any](b * (b - 1) / 2)
     var k = 0
     if (elemType == LongType) {

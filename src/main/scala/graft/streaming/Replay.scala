@@ -59,24 +59,15 @@ object Replay {
     * state-store open/commit + 32 file-sink tasks for ~10⁵ rows — pure
     * overhead (the r8 bench regression). Replays scope the conf down to
     * this constant around `start()`; production `writeStream` is untouched
-    * and sizes its state stores from the real session conf.
-    *
-    * Env-parameterised (optimization r19, the scale-dependent-settings
-    * rule): `GRAFT_REPLAY_PARTS` overrides for A/B probing and for replay
-    * fixtures big enough to want more; the local default stays 4 so the
-    * driver's bench is comparable round over round. */
-  val ReplayShufflePartitions: Int =
-    sys.env.get("GRAFT_REPLAY_PARTS").map(_.toInt).getOrElse(4)
+    * and sizes its state stores from the real session conf. */
+  val ReplayShufflePartitions: Int = 4
 
-  /** Scratch root for replay checkpoints/sinks (`GRAFT_REPLAY_SCRATCH`
-    * overrides java.io.tmpdir — e.g. a tmpfs for A/B-ing how much of the
-    * replay floor is checkpoint/sink IO). Default: unchanged tmpdir. */
+  /** Scratch for replay checkpoints, sinks and staged chunks, all under
+    * java.io.tmpdir (the deployment setting). One root for all of it keeps
+    * [[toBatchResumed]]'s hardlinks from the stage into a source dir on
+    * one filesystem. */
   private def scratchDir(prefix: String): String =
-    (sys.env.get("GRAFT_REPLAY_SCRATCH") match {
-      case Some(d) => java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(d), prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
-    }).toString
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private[streaming] def withReplayConf[A](spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
@@ -201,7 +192,7 @@ object Replay {
   // still gets a FRESH source dir / checkpoint / sink (the two query
   // lifecycles under test are re-run in full); only the landing bytes are
   // hardlinked from the per-JVM stage.
-  private val stagedChunks =
+  private[graft] val stagedChunks =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
 
   def toBatchResumed(spark0: org.apache.spark.sql.SparkSession,
@@ -214,8 +205,7 @@ object Replay {
     // different split points must never share chunks
     val (chunkA, chunkB) = stagedChunks.getOrElseUpdate(
       s"$srcParquet#$tag#$splitA", {
-        val stage = java.nio.file.Files
-          .createTempDirectory(s"graft_resume_stage_$tag").toString
+        val stage = scratchDir(s"graft_resume_stage_$tag")
         batch.filter(splitA).write.parquet(s"$stage/a")
         batch.filter(!splitA).write.parquet(s"$stage/b")
         (s"$stage/a", s"$stage/b")

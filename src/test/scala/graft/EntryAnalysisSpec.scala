@@ -1,24 +1,62 @@
 package graft
 
+import org.apache.spark.sql.graftshim.{Work, WorkCounter}
+import org.apache.spark.sql.types.DecimalType
+
 /** Analysis smoke test over the ENTIRE gate surface: every entry in
   * [[SparkEntry.queries]] must at least produce a resolved logical plan
-  * against the sf0.001 fixtures. This is cheap (no execution — seconds for
-  * the whole map) and exists because round 5 shipped a query that threw
-  * `UNRESOLVED_COLUMN` on first touch: specs-by-convention don't cover
-  * late-added queries, this does, mechanically.
+  * against the sf0.001 fixtures. It exists because round 5 shipped a query
+  * that threw `UNRESOLVED_COLUMN` on first touch: specs-by-convention don't
+  * cover late-added queries, this does, mechanically.
+  *
+  * The same traversal pins each query's WORK BUDGET (`docs/WORK_BUDGET.tsv`):
+  * jobs, completed stages, shuffle records written and input records read
+  * by one construction + noop write. Those counts are deterministic, so
+  * any change to them (an added shuffle, a lost broadcast, an extra eager
+  * job) fails by name instead of hiding in wall-clock noise.
   *
   * Also pins the gate invariants the driver relies on: every query has a
   * distinct name, and every oracle key refers to a registered query.
   */
 class EntryAnalysisSpec extends SparkSpec {
 
+  private case class Visit(name: String, analysisError: Option[String],
+                           decimalCols: Seq[String], work: Either[String, Work])
+
+  private def message(e: Throwable): String = // null for SOE/NPE
+    Option(e.getMessage).getOrElse(e.toString).take(200)
+
+  /** ONE pass over every query in sorted order. A warm construction first
+    * (analysis + schema checks) fills the per-JVM caches — MarketStore,
+    * Pq/GraphAnn indexes, Replay's staged chunks — so the counted
+    * construction + noop write after it costs the same whatever ran
+    * before; `clearCache` between queries drops persisted intermediates. */
+  private lazy val visits: Seq[Visit] = {
+    val counter = new WorkCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val visit =
+        try {
+          val schema = fn(spark, sf0001).queryExecution.analyzed.schema
+          val dec = schema.fields.collect {
+            case f if f.dataType.isInstanceOf[DecimalType] => f.name
+          }.toSeq
+          counter.reset()
+          val work =
+            try {
+              fn(spark, sf0001).write.format("noop").mode("overwrite").save()
+              Right(counter.read())
+            } catch { case e: Throwable => Left(message(e)) }
+          Visit(name, None, dec, work)
+        } catch { case e: Throwable =>
+          Visit(name, Some(message(e)), Nil, Left("analysis failed")) }
+      spark.catalog.clearCache()
+      visit
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
   test("every SparkEntry query analyzes against sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { fn(spark, sf0001).queryExecution.analyzed; None }
-        catch { case e: Throwable => // getMessage is null for SOE/NPE — fall back to the class name
-          Some(s"$name: ${Option(e.getMessage).getOrElse(e.toString).take(200)}") }
-    }
+    val failures = visits.flatMap(v => v.analysisError.map(e => s"${v.name}: $e"))
     assert(failures.isEmpty, s"\n${failures.mkString("\n")}")
   }
 
@@ -30,19 +68,40 @@ class EntryAnalysisSpec extends SparkSpec {
     // in CORRECTNESS. Decimals are fine INTERNALLY (exact cross-multiply);
     // they must never reach a dumped schema. tools/local_verify.py carries
     // the same guard on the dumped parquet side.
-    import org.apache.spark.sql.types.DecimalType
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val schema = fn(spark, sf0001).queryExecution.analyzed.schema
-          val dec = schema.fields.collect {
-            case f if f.dataType.isInstanceOf[DecimalType] => f.name
-          }
-          if (dec.nonEmpty) Some(s"$name: ${dec.mkString(", ")}") else None
-        } catch { case _: Throwable => None } // analysis failures: first test
+    val offenders = visits.collect {
+      case v if v.decimalCols.nonEmpty => s"${v.name}: ${v.decimalCols.mkString(", ")}"
     }
     assert(offenders.isEmpty,
       s"decimal-family output columns (driver hash hazard):\n${offenders.mkString("\n")}")
+  }
+
+  test("every query's work matches docs/WORK_BUDGET.tsv exactly") {
+    // Exact in both directions: an increase is a regression, a decrease
+    // is a change worth reading about. Rebase = copy the observed table
+    // over the pinned one and log the rebase in CHANGES.md.
+    val header = ("query" +: Work.ColumnNames).mkString("\t")
+    val observed = java.nio.file.Paths.get("target/WORK_BUDGET.tsv")
+    java.nio.file.Files.createDirectories(observed.getParent)
+    java.nio.file.Files.writeString(observed, (header +: visits.map { v =>
+      (v.name +: v.work.fold(_ => Seq.fill(Work.ColumnNames.size)("-1"),
+        _.columns.map(_.toString))).mkString("\t")
+    }).mkString("", "\n", "\n"))
+    val src = scala.io.Source.fromFile("docs/WORK_BUDGET.tsv", "UTF-8")
+    val pinned = try src.getLines().drop(1).map(_.split("\t")).map { r =>
+      r.head -> r.tail.map(_.toLong).toSeq }.toMap finally src.close()
+    val diffs = visits.flatMap { v =>
+      (pinned.get(v.name), v.work) match {
+        case (None, _) => Seq(s"${v.name}: no pinned row")
+        case (_, Left(e)) => Seq(s"${v.name}: counted run failed: $e")
+        case (Some(pin), Right(w)) =>
+          Work.ColumnNames.zip(pin.zip(w.columns)).collect {
+            case (c, (p, o)) if p != o => s"${v.name}: $c pinned $p observed $o"
+          }
+      }
+    } ++ (pinned.keySet -- visits.map(_.name)).toSeq.sorted
+      .map(k => s"$k: pinned row for an unknown query")
+    assert(diffs.isEmpty, s"\n${diffs.mkString("\n")}\nobserved table: $observed " +
+      "(rebase: copy it over docs/WORK_BUDGET.tsv and log the rebase in CHANGES.md)")
   }
 
   test("oracle keys are a subset of query names, names are distinct") {

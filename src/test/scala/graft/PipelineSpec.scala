@@ -109,6 +109,15 @@ class PipelineSpec extends SparkSpec {
     assert(kerPairs == hofPairs)
   }
 
+  test("sortedPairs kernel: past 46341 ids a named bound, not an Int overflow") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.LongType
+    val ids = new GenericArrayData(Array.tabulate[Any](46342)(_.toLong))
+    val e = intercept[IllegalArgumentException](
+      new graft.functions.SortedPairsKernel(LongType).apply(ids))
+    assert(e.getMessage.contains("46342 ids"), e.getMessage)
+  }
+
   test("wordShingles: per-doc duplicate shingles collapse, cross-doc copies stay") {
     // (An array_distinct row-local reformulation was MEASURED SLOWER than
     // the distinct() exchange at sf0.1 — ArrayDistinct on string arrays is

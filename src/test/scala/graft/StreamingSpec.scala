@@ -560,10 +560,23 @@ class StreamingSpec extends SparkSpec {
       "resume_oneshot"))
 
     // killed-and-resumed run over the same fixture
-    val resumed = canon(Replay.toBatchResumed(
-      spark, path, nsExpr < lit(splitNs), transform, "resume_spec"))
+    val resumedDf = Replay.toBatchResumed(
+      spark, path, nsExpr < lit(splitNs), transform, "resume_spec")
+    val resumed = canon(resumedDf)
     assert(resumed == oneShot, "resumed run diverged from uninterrupted run")
     assert(oneShot.nonEmpty)
+
+    // the staged chunks and the run's source/sink dirs share ONE scratch
+    // root, so landing a chunk by hardlink never crosses a device
+    def rootOf(p: java.nio.file.Path, depth: Int): java.nio.file.Path =
+      (1 to depth).foldLeft(p)((q, _) => q.getParent).toRealPath()
+    val sinkRoot = rootOf(java.nio.file.Paths.get(
+      new java.net.URI(resumedDf.inputFiles.head)), 3) // <root>/<run>/out/part
+    val stageRoots = Replay.stagedChunks.collect {
+      case (k, (a, b)) if k.contains("#resume_spec#") => Seq(a, b)
+    }.flatten.map(d => rootOf(java.nio.file.Paths.get(d), 2)) // <root>/<stage>/a
+    assert(stageRoots.nonEmpty && stageRoots.forall(_ == sinkRoot),
+      s"stage roots $stageRoots vs run root $sinkRoot")
 
     // and the kill genuinely happened mid-stream: chunk A alone emits a
     // strict non-empty subset (its watermark stops at maxA - delay)

@@ -164,6 +164,9 @@ object Bench {
     // price range, one-date fundamentals as-of, one-date status. Each call
     // is a full plan→schedule→collect round trip — the floor a user pays
     // only if they skip PointServe (serving_ms is the real serving number).
+    // The store's listing and schema are resolved once per MarketStore (in
+    // the warm calls), so a call is planning plus its scan jobs over the
+    // pruned months: one job for the price shape.
     val latencySamples: Seq[Double] = lane("planner_floor", Seq.empty[Double]) {
       import org.apache.spark.sql.functions.col
       val api = graft.api.PTradeApi(graft.domain.MarketStore.cached(spark, sfDir))

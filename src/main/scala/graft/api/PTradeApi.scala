@@ -49,18 +49,19 @@ final case class PTradeApi(views: MarketTables) {
   /** get_history (PTrade_API_mini_Reference.md:1777-1798): last `count`
     * trading days per security at or before `endDate`, on the full trading
     * calendar with suspension forward-fill (W2: suspended days carry the
-    * last close; volume = 0). */
+    * last close; volume = 0). Spine and bars are bounded at `endDate`
+    * BEFORE the fill: the fill only looks at preceding rows, so the answer
+    * is unchanged, and the bound lets a partitioned store prune months. */
   def getHistory(count: Int, securities: Seq[String], endDate: String): DataFrame = {
     val meta = views.stockMetadata.filter(col("symbol").isin(securities: _*))
-    val spine = views.calendar
+    val spine = views.calendar.filter(col("trade_date") <= lit(endDate))
       .join(broadcast(meta), col("trade_date").between(col("listed_date"), col("de_listed_date")))
       .select(col("symbol"), col("trade_date").as("date"))
     val joined = spine.join(
-      views.bars.filter(col("symbol").isin(securities: _*)), Seq("symbol", "date"), "left")
+      views.barsUpTo(endDate).filter(col("symbol").isin(securities: _*)), Seq("symbol", "date"), "left")
     val filled = Windows.fillForward(joined, Seq(col("symbol")), Seq(col("date")), Seq("close"))
       .withColumn("volume", coalesce(col("volume"), lit(0.0)))
-    Windows.lastNPerKey(filled.filter(col("date") <= lit(endDate)),
-        Seq(col("symbol")), Seq(col("date")), count)
+    Windows.lastNPerKey(filled, Seq(col("symbol")), Seq(col("date")), count)
       .select("symbol", "date", "close", "volume")
   }
 

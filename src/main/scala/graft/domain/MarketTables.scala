@@ -23,8 +23,8 @@ trait MarketTables {
   /** bars restricted to [start, end] (dates as `yyyy-MM-dd`). Implementations
     * over a partitioned layout override this to ALSO push a predicate on the
     * partition column: the engine cannot derive `p_month` bounds from a
-    * `date` filter on its own, and without them a date-range query lists and
-    * scans every partition of the fact table. */
+    * `date` filter on its own, and without them a date-range query scans
+    * every partition of the fact table. */
   def barsInRange(start: String, end: String): DataFrame =
     bars.filter(col("date").between(lit(start), lit(end)))
 
@@ -58,41 +58,48 @@ trait MarketTables {
 /** Materialized serving layout: fact tables (bars, valuation) month-
   * partitioned via [[Sinks.writePartitioned]] (partition-pruned date
   * predicates + symbol run-length locality); dimensions unpartitioned via
-  * [[Sinks.writeDim]]. */
+  * [[Sinks.writeDim]].
+  *
+  * One instance is one published version of the store: each table is
+  * resolved (file listing + schema) once, on first use, and every accessor
+  * is a filter or projection over that resolved frame. A call then pays
+  * planning plus its scan, never a fresh listing or schema-inference job;
+  * the `p_month` predicates prune against the listing cached in the
+  * table's file index. The store is immutable once published, so a new
+  * version is a new instance ([[MarketStore.materialize]] returns one). */
 final case class MarketStore(spark: SparkSession, root: String) extends MarketTables {
-  private def fact(name: String): DataFrame =
-    spark.read.parquet(s"$root/$name").drop("p_month")
-  private def dim(name: String): DataFrame = spark.read.parquet(s"$root/$name")
+  private def read(name: String): DataFrame = spark.read.parquet(s"$root/$name")
 
-  def bars: DataFrame = fact("bars")
-  def valuation: DataFrame = fact("valuation")
+  @transient private lazy val barsAll: DataFrame = read("bars")
+  @transient private lazy val valuationAll: DataFrame = read("valuation")
+
+  def bars: DataFrame = barsAll.drop("p_month")
+  def valuation: DataFrame = valuationAll.drop("p_month")
 
   // explicit partition predicates: p_month is 'yyyy-MM', which orders
   // lexicographically, so month bounds derived from the date bounds prune
   // the file listing to exactly the touched months
-  private def prunedRange(name: String, start: String, end: String): DataFrame =
-    spark.read.parquet(s"$root/$name")
-      .filter(col("p_month").between(start.substring(0, 7), end.substring(0, 7)))
+  private def prunedRange(all: DataFrame, start: String, end: String): DataFrame =
+    all.filter(col("p_month").between(start.substring(0, 7), end.substring(0, 7)))
       .filter(col("date").between(lit(start), lit(end)))
       .drop("p_month")
   override def barsInRange(start: String, end: String): DataFrame =
-    prunedRange("bars", start, end)
+    prunedRange(barsAll, start, end)
   override def barsUpTo(end: String): DataFrame =
-    spark.read.parquet(s"$root/bars")
-      .filter(col("p_month") <= end.substring(0, 7))
+    barsAll.filter(col("p_month") <= end.substring(0, 7))
       .filter(col("date") <= lit(end))
       .drop("p_month")
   override def valuationInRange(start: String, end: String): DataFrame =
-    prunedRange("valuation", start, end)
-  def calendar: DataFrame = dim("calendar")
-  def exrightsEvents: DataFrame = dim("exrights_events")
-  def exrightsAB: DataFrame = dim("exrights_ab")
-  def adjFactors: DataFrame = dim("adj_factors")
-  def fundamentals: DataFrame = dim("fundamentals")
-  def fundamentalsAll: DataFrame = dim("fundamentals_all")
-  def indexConstituents: DataFrame = dim("index_constituents")
-  def stockMetadata: DataFrame = dim("stock_metadata")
-  def industry: DataFrame = dim("industry")
+    prunedRange(valuationAll, start, end)
+  @transient lazy val calendar: DataFrame = read("calendar")
+  @transient lazy val exrightsEvents: DataFrame = read("exrights_events")
+  @transient lazy val exrightsAB: DataFrame = read("exrights_ab")
+  @transient lazy val adjFactors: DataFrame = read("adj_factors")
+  @transient lazy val fundamentals: DataFrame = read("fundamentals")
+  @transient lazy val fundamentalsAll: DataFrame = read("fundamentals_all")
+  @transient lazy val indexConstituents: DataFrame = read("index_constituents")
+  @transient lazy val stockMetadata: DataFrame = read("stock_metadata")
+  @transient lazy val industry: DataFrame = read("industry")
 }
 
 object MarketStore {

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.WorkCounter
 import graft.api.PTradeApi
-import graft.domain.MarketViews
+import graft.domain.{MarketStore, MarketTables, MarketViews}
+import graft.ops.Windows
 
 /** Serving-surface behavior tests, incl. the SURVEY §7.4 risk register:
   * point-in-time correctness (no future leakage), suspension fill
@@ -87,6 +90,69 @@ class ApiSpec extends SparkSpec {
       assert(filledDays.filter(col("close").isNull).count() == 0,
         "suspended days must carry a forward-filled close")
     }
+  }
+
+  test("getHistory bounded at the end date equals the fill-then-cut form") {
+    // the unbounded formulation: spine and bars over every date, filled,
+    // then cut at the end date
+    def fillThenCut(t: MarketTables, secs: Seq[String], end: String): DataFrame = {
+      val meta = t.stockMetadata.filter(col("symbol").isin(secs: _*))
+      val spine = t.calendar
+        .join(broadcast(meta), col("trade_date").between(col("listed_date"), col("de_listed_date")))
+        .select(col("symbol"), col("trade_date").as("date"))
+      val filled = Windows.fillForward(
+          spine.join(t.bars.filter(col("symbol").isin(secs: _*)), Seq("symbol", "date"), "left"),
+          Seq(col("symbol")), Seq(col("date")), Seq("close"))
+        .withColumn("volume", coalesce(col("volume"), lit(0.0)))
+      Windows.lastNPerKey(filled.filter(col("date") <= lit(end)),
+          Seq(col("symbol")), Seq(col("date")), 20)
+        .select("symbol", "date", "close", "volume")
+    }
+    val meta = views.stockMetadata
+    // a suspension day: listed, on the calendar, no bar for syms.head
+    val gap = views.calendar
+      .join(meta.filter(col("symbol") === syms.head),
+        col("trade_date").between(col("listed_date"), col("de_listed_date")))
+      .join(views.bars.filter(col("symbol") === syms.head),
+        col("trade_date") === col("date"), "left_anti")
+      .agg(min(col("trade_date"))).head().getDate(0)
+    assert(gap != null, s"${syms.head} has no suspension day on sf0.001")
+    // the last calendar day before the last-listed symbol's listing
+    val lastListed = meta.orderBy(col("listed_date").desc, col("symbol")).head()
+    val (late, listed) = (lastListed.getString(0), lastListed.getDate(2))
+    val beforeListing = views.calendar.filter(col("trade_date") < lit(listed))
+      .agg(max(col("trade_date"))).head().getDate(0)
+    assert(beforeListing != null, s"$late lists on the first calendar day")
+    val secs = (syms :+ late).distinct
+    val store = MarketStore.cached(spark, sf0001)
+    for (t <- Seq[MarketTables](views, store);
+         end <- Seq(gap.toString, beforeListing.toString, "1997-06-30", "2001-12-31")) {
+      val bounded = PTradeApi(t).getHistory(20, secs, end).collect().map(_.toString).sorted.toSeq
+      val reference = fillThenCut(t, secs, end).collect().map(_.toString).sorted.toSeq
+      assert(bounded.nonEmpty && bounded == reference,
+        s"${t.getClass.getSimpleName} end=$end: bounded and fill-then-cut differ")
+      if (end == beforeListing.toString) assert(!bounded.exists(_.contains(late)))
+    }
+  }
+
+  test("a warmed MarketStore builds calls without jobs and collects getPrice in one") {
+    val store = MarketStore.cached(spark, sf0001)
+    val storeApi = PTradeApi(store)
+    def price = storeApi.getPrice(Seq("000001.SZ"), "1996-03-01", "1996-03-31")
+    price.collect()
+    store.stockMetadata.collect()
+    val counter = new WorkCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      counter.reset()
+      store.barsInRange("1996-03-01", "1996-05-31")
+      store.stockMetadata
+      val df = price
+      assert(counter.read().jobs == 0, "building a store call must launch no job")
+      counter.reset()
+      assert(df.collect().nonEmpty)
+      assert(counter.read().jobs == 1, "a getPrice collect is one scan job")
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 
   test("getPrice post-adjustment only rescales prices (volume unchanged)") {

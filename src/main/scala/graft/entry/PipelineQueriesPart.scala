@@ -104,7 +104,9 @@ private[graft] trait PipelineQueriesPart extends EntryShared {
 
     // BPE inference under the learned merges: ascending-rank replace
     // chain (provably ≡ the priority loop — a rank-k merge only creates
-    // higher-rank pairs), row-local until the per-doc count.
+    // higher-rank pairs), row-local until the per-doc count. The merges
+    // are trained on the driver (trainBpeLocal, one corpus job), the
+    // same sequence tok_bpe_merges learns with the per-merge loop.
     "tok_bpe_encode" -> ((s, dir) =>
       Tokenizer.trainAndEncodeBpe(TestData(s, dir).documents, "doc_id", "text",
         nMerges = 8)),

@@ -390,12 +390,15 @@ object Tokenizer {
   }
 
   /** Train-then-encode for BPE (the gate shape): merges learned from the
-    * corpus, then the corpus re-tokenized under them. */
+    * corpus, then the corpus re-tokenized under them. Training is
+    * [[trainBpeLocal]] — the same merge sequence as [[trainBpe]] in one
+    * corpus job instead of a few per merge — so the job count does not
+    * grow with `nMerges`, and its `maxLocalWords` guard applies here. */
   def trainAndEncodeBpe(docs: DataFrame, idCol: String, textCol: String,
                         nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val merges = trainBpe(docs, textCol, nMerges)
+    val merges = trainBpeLocal(docs, textCol, nMerges)
       .orderBy("merge_rank").select("lft", "rgt").as[(String, String)]
       .collect().toSeq
     bpeEncode(docs, idCol, textCol, merges)

@@ -256,13 +256,21 @@ object Graph {
     * an empty frontier exits early with the identical result. Weights
     * are integer (exact BIGINT min-plus — no float accumulation order).
     * `edges` are taken as directed; symmetrize for undirected graphs.
-    * localCheckpoint per round (rule 8). Returns (node, dist) for every
-    * node reachable within `maxHops`.
+    *
+    * Materialization (rule 8): the edge frame is checkpointed ONCE, as in
+    * [[pageRank]] — the loop reads it every round, and an un-materialized
+    * edge expression (a scan + distinct + unions in the gate) would
+    * re-execute per round. Each round then checkpoints ONE frame: `dist`
+    * full-outer-joined with the round's min-relaxed distances, carrying
+    * (node, dist, improved). The next `dist` is its projection and the
+    * frontier its `improved` rows, so no second checkpoint hands a frame
+    * from one step to the next. Returns (node, dist) for every node
+    * reachable within `maxHops`.
     */
   def boundedSssp(edges: DataFrame, src: String, dst: String, w: String,
                   sources: DataFrame, maxHops: Int): DataFrame = {
     val e = edges.select(col(src).as("__s"), col(dst).as("__d"),
-      col(w).as("__w"))
+      col(w).as("__w")).localCheckpoint(eager = true)
     var dist = sources.select(col("node"), lit(0L).as("dist"))
       .distinct().localCheckpoint()
     var frontier = dist
@@ -270,19 +278,18 @@ object Graph {
     var done = false
     while (h < maxHops && !done) {
       val relaxed = frontier.join(e, col("node") === col("__s"))
-        .select(col("__d").as("node"), (col("dist") + col("__w")).as("dist"))
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-      val improved = relaxed
-        .join(dist.select(col("node"), col("dist").as("__old")),
-          Seq("node"), "left")
-        .filter(col("__old").isNull || col("dist") < col("__old"))
-        .select("node", "dist").localCheckpoint()
-      if (improved.isEmpty) done = true
-      else {
-        dist = dist.unionByName(improved)
-          .groupBy("node").agg(min(col("dist")).as("dist")).localCheckpoint()
-        frontier = improved
-      }
+        .select(col("__d").as("node"), (col("dist") + col("__w")).as("__new"))
+        .groupBy("node").agg(min(col("__new")).as("__new"))
+      val better = col("__new").isNotNull &&
+        (col("dist").isNull || col("__new") < col("dist"))
+      val round = dist.join(relaxed, Seq("node"), "full_outer")
+        .select(col("node"),
+          when(better, col("__new")).otherwise(col("dist")).as("dist"),
+          better.as("improved"))
+        .localCheckpoint()
+      frontier = round.filter(col("improved")).select("node", "dist")
+      dist = round.select("node", "dist")
+      if (frontier.isEmpty) done = true
       h += 1
     }
     dist

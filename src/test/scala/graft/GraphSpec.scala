@@ -125,6 +125,30 @@ class GraphSpec extends SparkSpec {
     assert(run(10) == run(2))
   }
 
+  test("boundedSssp derives its edge input once, however many hops it runs") {
+    // a 12-node unit-weight chain from node 0: the wave still moves at hop
+    // 6, so neither run exits early and every round relaxes edges. The
+    // accumulator counts the rows the edge expression produces. Spark's
+    // input_records cannot tell this apart: it also counts every read of
+    // a checkpointed (cached) frame, which the loop does once per round.
+    val derived = spark.sparkContext.longAccumulator("sssp edge rows")
+    val e = (0L until 12L).map(i => (i, i + 1, 1L)).toDS()
+      .map { r => derived.add(1); r }.toDF("src", "dst", "w")
+    val src = Seq(0L).toDF("node")
+    def run(h: Int): (Map[Long, Long], Long) = {
+      derived.reset()
+      val d = Graph.boundedSssp(e, "src", "dst", "w", src, h)
+        .as[(Long, Long)].collect().toMap
+      (d, derived.value.longValue)
+    }
+    val (d2, rows2) = run(2)
+    val (d6, rows6) = run(6)
+    assert(d2 == (0L to 2L).map(n => n -> n).toMap, s"2 hops: $d2")
+    assert(d6 == (0L to 6L).map(n => n -> n).toMap, s"6 hops: $d6")
+    assert(rows2 == 12 && rows6 == 12,
+      s"edge expression re-derived per round: $rows2 rows at 2 hops, $rows6 at 6")
+  }
+
   test("cooccurrencePairs: oriented once per pair, duplicate memberships collapsed") {
     // basket 1: {a,b,c}; basket 2: {a,b} with a duplicated 'a' line;
     // basket 3: {c} (no pairs). (a,b) co-occurs twice, others once.

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerBus
 import graft.ann.{Ann, Pq, Quant}
 import graft.sources.TestData
 
@@ -185,12 +186,7 @@ class PqSpec extends SparkSpec {
       Pq.ivfPqTopK(embs, queries, "vec_id", "embedding", 5,
         nLists = 16, nProbe = 4, m = 8, dsub = 8, ksub = 16, lloydIters = 0,
         residual = true)
-      // listener bus is async: poll until the job counter is stable
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        if (total.get() == last) stable += 1 else { stable = 0; last = total.get() }
-      }
+      ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
     // every counting action in the build is description-tagged ("graft
@@ -310,11 +306,7 @@ class PqSpec extends SparkSpec {
       val nRes = Pq.topKFromIndex(idxRes, queries, "vec_id", "embedding", 5, nProbe = 4)
         .count()
       assert(nRes == 50, "5 rows per query from the served residual index")
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        if (total.get() == last) stable += 1 else { stable = 0; last = total.get() }
-      }
+      ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
     assert(tagged.asScala.isEmpty,
@@ -580,11 +572,7 @@ class PqSpec extends SparkSpec {
         res -> Pq.topKFromIndex(grown, queries, "vec_id", "embedding", 5, nProbe = 4)
           .as[(Long, Long, Long, Double)].collect().toSet
       }
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        if (total.get() == last) stable += 1 else { stable = 0; last = total.get() }
-      }
+      ListenerBus.drain(spark.sparkContext)
       out
     } finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
@@ -657,11 +645,7 @@ class PqSpec extends SparkSpec {
       val got = GraphAnn.topKFromIndex(idx, queries, "vec_id", "embedding", 5,
           beam = 16, hops = 5)
         .collect().map(_.toSeq).toSet
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        if (total.get() == last) stable += 1 else { stable = 0; last = total.get() }
-      }
+      ListenerBus.drain(spark.sparkContext)
       got
     } finally spark.sparkContext.removeSparkListener(l)
     assert(served == inline, "served graph search diverged from inline")

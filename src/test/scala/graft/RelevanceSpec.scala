@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerBus
 import graft.ops.Quantiles
 import graft.quality.Relevance
 import graft.sources.TestData
@@ -54,11 +55,7 @@ class RelevanceSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       Relevance.tfIdfTopTerms(docs, "doc_id", "text", 3)
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        if (total.get() == last) stable += 1 else { stable = 0; last = total.get() }
-      }
+      ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
     assert(!sites.asScala.exists(_.startsWith("count")),

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.Tokenizer
+import org.apache.spark.sql.graftshim.{ListenerBus, WorkCounter}
 
 class TokenizerSpec extends SparkSpec {
   import spark.implicits._
@@ -152,14 +153,7 @@ class TokenizerSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(l)
       try {
         val r = f
-        // listener bus is async: poll until the counter is stable (PqSpec
-        // pattern)
-        var last = -1; var stable = 0; var waited = 0
-        while (stable < 3 && waited < 10000) {
-          Thread.sleep(100); waited += 100
-          if (jobs.get() == last) stable += 1
-          else { stable = 0; last = jobs.get() }
-        }
+        ListenerBus.drain(spark.sparkContext)
         (r, jobs.get())
       } finally spark.sparkContext.removeSparkListener(l)
     }
@@ -274,6 +268,31 @@ class TokenizerSpec extends SparkSpec {
     val r0 = Tokenizer.bpeEncode(docs, "doc_id", "text", Seq.empty)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     assert(r0(0) == (1L, 4L, 3 + 3 + 5 + 6L))
+  }
+
+  test("trainAndEncodeBpe: jobs do not grow with merges; counts ≡ bpeEncode under trainBpe") {
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val counter = new WorkCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    def encoded(nMerges: Int): (Array[(Long, Long, Long)], Long) = {
+      counter.reset()
+      val r = Tokenizer.trainAndEncodeBpe(docs, "doc_id", "text", nMerges)
+        .as[(Long, Long, Long)].collect().sortBy(_._1)
+      (r, counter.read().jobs)
+    }
+    val ((_, jobs2), (enc8, jobs8)) =
+      try (encoded(2), encoded(8))
+      finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs8 == jobs2,
+      s"BPE encode jobs grew with merges: $jobs2 at 2 merges, $jobs8 at 8")
+    val merges = Tokenizer.trainBpe(docs, "text", nMerges = 8)
+      .orderBy("merge_rank").select("lft", "rgt").as[(String, String)]
+      .collect().toSeq
+    assert(merges.length == 8, s"corpus supports 8 merges, got ${merges.length}")
+    val ref = Tokenizer.bpeEncode(docs, "doc_id", "text", merges)
+      .as[(Long, Long, Long)].collect().sortBy(_._1)
+    assert(enc8.toSeq == ref.toSeq,
+      s"first diff: ${enc8.zip(ref).find(p => p._1 != p._2)}")
   }
 
   test("wordpieceEncode: greedy longest-match, the stuck→unk rule, counts") {

@@ -17,10 +17,10 @@ object Work {
 }
 
 /** Test-side [[Work]] counter over everything a context runs between
-  * [[reset]] and [[read]], streaming micro-batch threads included. It
-  * lives under `org.apache.spark` for one call: both ends drain the
-  * asynchronous listener bus, so no event of the measured work is still in
-  * flight when it is read (or leaks into the next measurement). */
+  * [[reset]] and [[read]], streaming micro-batch threads included. Both
+  * ends drain the asynchronous listener bus ([[ListenerBus.drain]]), so no
+  * event of the measured work is still in flight when it is read (or leaks
+  * into the next measurement). */
 final class WorkCounter(sc: SparkContext) extends SparkListener {
   @volatile private var jobs, stages, shuffleRecords, inputRecords = 0L
 
@@ -38,12 +38,20 @@ final class WorkCounter(sc: SparkContext) extends SparkListener {
   }
 
   def reset(): Unit = {
-    sc.listenerBus.waitUntilEmpty()
+    ListenerBus.drain(sc)
     jobs = 0; stages = 0; shuffleRecords = 0; inputRecords = 0
   }
 
   def read(): Work = {
-    sc.listenerBus.waitUntilEmpty()
+    ListenerBus.drain(sc)
     Work(jobs, stages, shuffleRecords, inputRecords)
   }
+}
+
+/** Blocks until the listener bus has delivered every event posted so far,
+  * so a test listener has seen every job of an action that returned. It
+  * lives under `org.apache.spark` for this one call: the context's
+  * listener bus is package-private. */
+object ListenerBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -68,9 +68,15 @@ object Bench {
     if (failed.get()) -1L else (calls.get() / seconds(t0)).round
   }
 
+  /** Generated classes compiled so far in this JVM (driver and local
+    * tasks): the Janino compiles that missed Spark's codegen cache. */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One query's measurement: an untimed warm pass that also counts the
     * rows, then two timed noop writes; the wall is the faster run (the
-    * second has warm code caches). The timed action is a noop-sink write,
+    * second has warm code caches), returned with its row count and the
+    * classes that run compiled. The timed action is a noop-sink write,
     * NOT count(): count() lets Catalyst prune every projected column, the
     * noop sink materializes every output row with all its columns.
     *
@@ -78,27 +84,30 @@ object Bench {
     * `failed`, adds no wall to any total, and its exception is named on
     * stderr. */
   private[graft] def measure(spark: SparkSession, name: String,
-                             query: () => DataFrame): Option[(Double, Long)] =
+                             query: () => DataFrame): Option[(Double, Long, Long)] =
     try {
       val w0 = System.nanoTime()
       val rows = query().count()
       val warmSec = seconds(w0)
       val runs = (0 until 2).map { _ =>
         val g0 = gcMillis
+        val c0 = compiles
         val t0 = System.nanoTime()
         try {
           query().write.format("noop").mode("overwrite").save()
-          (seconds(t0), gcMillis - g0)
+          (seconds(t0), gcMillis - g0, compiles - c0)
         } finally {
           spark.catalog.clearCache() // drop per-query persisted intermediates
           System.gc() // reap dead broadcasts/shuffles outside timed windows
         }
       }
       // stderr (never the stdout tail): warm-pass cost, both raw runs, and
-      // the GC time each timed window absorbed
+      // the GC time and codegen compiles each timed window absorbed
       System.err.println(f"[bench] $name%-24s warm=$warmSec%7.2fs " +
-        runs.map { case (dt, gc) => f"run=$dt%7.2fs(gc=${gc}ms)" }.mkString(" "))
-      Some((runs.map(_._1).min, rows))
+        runs.map { case (dt, gc, cc) => f"run=$dt%7.2fs(gc=${gc}ms,compiles=$cc)" }
+          .mkString(" "))
+      val (wall, _, cc) = runs.minBy(_._1)
+      Some((wall, rows, cc))
     } catch { case t: Throwable =>
       System.err.println(s"[bench] $name failed: $t")
       None
@@ -273,16 +282,19 @@ object Bench {
       .toSeq.sortBy(-_._2)
       .map { case (f, v) => "\"" + f + "\":" + f2(v) }
       .mkString("{", ",", "}")
-    val qs = ok.sortBy { case (_, (v, _)) => -v }.take(10)
-      .map { case (k, (v, _)) => "\"" + k + "\":" + f2(v) }
+    val qs = ok.sortBy { case (_, (v, _, _)) => -v }.take(10)
+      .map { case (k, (v, _, _)) => "\"" + k + "\":" + f2(v) }
       .mkString("{", ",", "}")
     // failed queries contribute neither rows nor time: a failure deflates
     // nothing silently — it is surfaced via "failed" instead
     val total = ok.map(_._2._1).sum
     val okRows = ok.map(_._2._2).sum
+    // classes the kept timed runs compiled: a warm re-run should compile
+    // none, so a cache regression shows as a count, not as wall noise
+    val okCompiles = ok.map(_._2._3).sum
     val rps = if (total > 0) (okRows / total).round else -1L
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","families":$fams,"queries":$qs,"store_build":${f2(storeSec)},"index_build":${f2(idxSec)},"stream_harness":${f2(streamHarnessSec)},"planner_floor_ms":{"avg":${f2(latAvg)},"p99":${f2(latP99)},"n":${latencySamples.size}},"serving_ms":{"avg":${f3(servAvg)},"p99":${f3(servP99)},"n":${servingSamples.size},"build_sec":${f2(servingBuildSec)},"qps16":$servingQps},"ann_serving_ms":{"avg":${f3(annAvg)},"p99":${f3(annP99)},"n":${annSamples.size},"filtered_avg":${f3(annFilteredAvg)},"build_sec":${f2(annBuildSec)},"qps16":$annQps},"rows_per_sec":$rps,"failed":$failed,"n_queries":${results.size},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","families":$fams,"queries":$qs,"store_build":${f2(storeSec)},"index_build":${f2(idxSec)},"stream_harness":${f2(streamHarnessSec)},"planner_floor_ms":{"avg":${f2(latAvg)},"p99":${f2(latP99)},"n":${latencySamples.size}},"serving_ms":{"avg":${f3(servAvg)},"p99":${f3(servP99)},"n":${servingSamples.size},"build_sec":${f2(servingBuildSec)},"qps16":$servingQps},"ann_serving_ms":{"avg":${f3(annAvg)},"p99":${f3(annP99)},"n":${annSamples.size},"filtered_avg":${f3(annFilteredAvg)},"build_sec":${f2(annBuildSec)},"qps16":$annQps},"rows_per_sec":$rps,"compiles":$okCompiles,"failed":$failed,"n_queries":${results.size},"sf":"$sfDir"}"""
     // warn on stderr (so it can't displace the metric line) before the
     // 2000-char tail could truncate it
     if (line.length > 1900)

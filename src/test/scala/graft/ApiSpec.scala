@@ -141,7 +141,7 @@ class ApiSpec extends SparkSpec {
     def price = storeApi.getPrice(Seq("000001.SZ"), "1996-03-01", "1996-03-31")
     price.collect()
     store.stockMetadata.collect()
-    val counter = new WorkCounter(spark.sparkContext)
+    val counter = new WorkCounter(spark)
     spark.sparkContext.addSparkListener(counter)
     try {
       counter.reset()

@@ -15,7 +15,7 @@ class BenchSpec extends SparkSpec {
   }
 
   test("a healthy query reports its row count and a positive wall") {
-    val Some((wall, rows)) = Bench.measure(spark, "ok", () => spark.range(5).toDF())
+    val Some((wall, rows, _)) = Bench.measure(spark, "ok", () => spark.range(5).toDF())
     assert(rows == 5 && wall > 0)
   }
 }

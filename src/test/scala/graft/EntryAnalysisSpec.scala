@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.DecimalType
   * cover late-added queries, this does, mechanically.
   *
   * The same traversal pins each query's WORK BUDGET (`docs/WORK_BUDGET.tsv`):
-  * jobs, completed stages, shuffle records written and input records read
-  * by one construction + noop write. Those counts are deterministic, so
+  * jobs, completed stages, shuffle records written and rows read from
+  * sources (not re-reads of cached or checkpointed frames) by one
+  * construction + noop write. Those counts are deterministic, so
   * any change to them (an added shuffle, a lost broadcast, an extra eager
   * job) fails by name instead of hiding in wall-clock noise.
   *
@@ -32,7 +33,7 @@ class EntryAnalysisSpec extends SparkSpec {
     * construction + noop write after it costs the same whatever ran
     * before; `clearCache` between queries drops persisted intermediates. */
   private lazy val visits: Seq[Visit] = {
-    val counter = new WorkCounter(spark.sparkContext)
+    val counter = new WorkCounter(spark)
     spark.sparkContext.addSparkListener(counter)
     try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val visit =

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.WorkCounter
 import graft.ops.Graph
 
 class GraphSpec extends SparkSpec {
@@ -126,27 +127,37 @@ class GraphSpec extends SparkSpec {
   }
 
   test("boundedSssp derives its edge input once, however many hops it runs") {
-    // a 12-node unit-weight chain from node 0: the wave still moves at hop
-    // 6, so neither run exits early and every round relaxes edges. The
-    // accumulator counts the rows the edge expression produces. Spark's
-    // input_records cannot tell this apart: it also counts every read of
-    // a checkpointed (cached) frame, which the loop does once per round.
+    // a 12-node unit-weight chain from node 0, read from a parquet file: the
+    // wave still moves at hop 6, so neither run exits early and every round
+    // relaxes edges. The accumulator counts the rows the edge expression
+    // produces; WorkCounter's input records count the rows the file scan
+    // produces, not the per-round reads of the checkpointed edges.
+    val path = java.nio.file.Files.createTempDirectory("graft_sssp_chain")
+      .resolve("edges").toString
+    (0L until 12L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "w")
+      .write.parquet(path)
     val derived = spark.sparkContext.longAccumulator("sssp edge rows")
-    val e = (0L until 12L).map(i => (i, i + 1, 1L)).toDS()
+    val e = spark.read.parquet(path).as[(Long, Long, Long)]
       .map { r => derived.add(1); r }.toDF("src", "dst", "w")
     val src = Seq(0L).toDF("node")
-    def run(h: Int): (Map[Long, Long], Long) = {
+    val counter = new WorkCounter(spark)
+    spark.sparkContext.addSparkListener(counter)
+    def run(h: Int): (Map[Long, Long], Long, Long) = {
       derived.reset()
+      counter.reset()
       val d = Graph.boundedSssp(e, "src", "dst", "w", src, h)
         .as[(Long, Long)].collect().toMap
-      (d, derived.value.longValue)
+      (d, derived.value.longValue, counter.read().inputRecords)
     }
-    val (d2, rows2) = run(2)
-    val (d6, rows6) = run(6)
+    val ((d2, rows2, in2), (d6, rows6, in6)) =
+      try (run(2), run(6))
+      finally spark.sparkContext.removeSparkListener(counter)
     assert(d2 == (0L to 2L).map(n => n -> n).toMap, s"2 hops: $d2")
     assert(d6 == (0L to 6L).map(n => n -> n).toMap, s"6 hops: $d6")
     assert(rows2 == 12 && rows6 == 12,
       s"edge expression re-derived per round: $rows2 rows at 2 hops, $rows6 at 6")
+    assert(in2 == 12 && in6 == 12,
+      s"edge file rows charged per round: $in2 at 2 hops, $in6 at 6")
   }
 
   test("cooccurrencePairs: oriented once per pair, duplicate memberships collapsed") {

@@ -272,7 +272,7 @@ class TokenizerSpec extends SparkSpec {
 
   test("trainAndEncodeBpe: jobs do not grow with merges; counts ≡ bpeEncode under trainBpe") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    val counter = new WorkCounter(spark.sparkContext)
+    val counter = new WorkCounter(spark)
     spark.sparkContext.addSparkListener(counter)
     def encoded(nMerges: Int): (Array[(Long, Long, Long)], Long) = {
       counter.reset()
